@@ -31,8 +31,8 @@ import org.apache.spark.sql.SparkSession
   *    of the same surface see the same cache/GC history;
   *  - between families the harness sweeps ALL session state —
   *    `catalog.clearCache()`, the process-wide fit memo
-  *    ([[graft.queries.clearFitMemo]], which also unpersists memoized
-  *    relations like the shared k-NN edge cache), temp views, then a
+  *    ([[graft.queries.clearFitMemo]], which also releases memoized
+  *    relations like the shared k-NN edge relation), temp views, then a
   *    GC — so one family's residue cannot skew another's timings;
   *  - WITHIN a family, Spark-level caches survive between queries and
   *    runs: deterministic shared fits (the IVF model, the k-NN edge

@@ -364,12 +364,8 @@ object Dedup {
     // twice per round doubles the plan every iteration — Catalyst
     // re-analysis goes exponential long before the data is the problem.
     // Checkpointing truncates lineage so round N's plan is O(1) deep.
-    // localCheckpoint blocks live on executors and die with them — when
-    // the session has a reliable checkpoint dir configured
-    // (sc.setCheckpointDir), the loop transparently switches to
-    // fault-tolerant reliable checkpoints for cluster runs.
-    val sc = pairs.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
+    // Each round is released as soon as the next one is materialized,
+    // so only the returned round stays checkpointed.
     // The re-wrap after the eager checkpoint strips the ORIGIN-PLAN
     // STATISTICS the checkpoint propagates into its LogicalRDD
     // (SPARK-39748): each round's plan references the previous round's
@@ -381,14 +377,14 @@ object Dedup {
     // checkpoint (this wedged the r7 bench on s_knn_components).
     // createDataFrame over the materialized rows is a plain source
     // relation with default stats — O(1) planning per round forever.
-    def ckpt(df: DataFrame): DataFrame = {
-      val cp = if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-      cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
+    def ckpt(df: DataFrame): (Checkpointed, DataFrame) = {
+      val cp = Checkpointed(df)
+      (cp, cp.df.sparkSession.createDataFrame(cp.df.rdd, cp.df.schema))
     }
     // materialize the pair-generation subtree ONCE: `edges` references
     // `pairs` twice (both orientations), and each round's join would
     // otherwise re-run the full candidate-pair pipeline per branch
-    val base = ckpt(pairs.select(col("id_a"), col("id_b")))
+    val (baseCp, base) = ckpt(pairs.select(col("id_a"), col("id_b")))
     // counting the checkpointed relation is a metadata-cheap job (no
     // recompute), and it decides the strategy like AQE decides a join
     val nEdges = base.count()
@@ -402,12 +398,15 @@ object Dedup {
            org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    if (nEdges <= driverFallbackEdges && integralIds)
-      return driverComponents(base)
+    if (nEdges <= driverFallbackEdges && integralIds) {
+      val labels = driverComponents(base)
+      baseCp.release()
+      return labels
+    }
     val edges = base.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(base.select(col("id_b").as("src"), col("id_a").as("dst")))
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
+    var (labelsCp, labels) = ckpt(edges.select(col("src").as("id"))
+      .distinct().withColumn("comp", col("id")))
     var changed = 1L
     var round = 0
     while (changed > 0) {
@@ -430,7 +429,7 @@ object Dedup {
       // through an observed metric — a separate count() would be a
       // second driver round-trip over the same rows every round
       val obs = new org.apache.spark.sql.Observation(s"labelProp_$round")
-      val updated = ckpt(stepped.join(hop, Seq("mid"))
+      val (updatedCp, updated) = ckpt(stepped.join(hop, Seq("mid"))
         .select(col("id"),
           least(col("mid"), col("hop")).as("comp"),
           (least(col("mid"), col("hop")) < col("old")).as("chg"))
@@ -439,9 +438,12 @@ object Dedup {
         case null => 0L
         case n: java.lang.Number => n.longValue()
       }
+      labelsCp.release()
+      labelsCp = updatedCp
       labels = updated.select(col("id"), col("comp"))
       round += 1
     }
+    baseCp.release()
     labels
   }
 

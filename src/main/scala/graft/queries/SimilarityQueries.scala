@@ -36,28 +36,19 @@ object SimilarityQueries {
   private def memo[T <: AnyRef](key: String)(fit: => T): T =
     memoFit(key)(fit)
 
-  /** THE corpus k-NN edge relation — built once, persisted, and shared
-    * by its three gated consumers (`s_knn_join`, `s_mutual_knn`,
+  /** THE corpus k-NN edge relation — built once and shared by its
+    * three gated consumers (`s_knn_join`, `s_mutual_knn`,
     * `s_knn_components`): the corpus×corpus cell join is the most
     * expensive relation in the ANN family, and each consumer
-    * re-deriving it tripled that cost in one bench pass. Keyed by the
-    * session's applicationId as well as the fixture dir because a
-    * cached DataFrame (unlike the pure model fits) is bound to the
-    * SparkSession that built it. */
+    * re-deriving it tripled that cost in one bench pass. */
   private def sharedKnnRanked(s: org.apache.spark.sql.SparkSession,
                               dir: String): org.apache.spark.sql.DataFrame = {
     val emb = t(s, dir, "embeddings")
     val model = memo(s"ivf:$dir:k8i3")(graft.operators.Ivf.fit(
       emb, "vec_id", "embedding", k = 8, iters = 3))
-    // memoCkpt, not persist: consumers get a one-leaf plan instead of
-    // the full cell-join pipeline nested under an InMemoryRelation —
-    // every action stringifies its plan for the SQL listener and AQE
-    // walks it per stage (see graft.queries.memoCkpt)
-    graft.queries.memoCkpt(
-        s"knnjoin:${s.sparkContext.applicationId}:$dir:k8i3:k3p2") {
-      graft.operators.Ivf.knnJoin(emb, "vec_id", "embedding",
-        model, k = 3, nProbe = 2)
-    }
+    memo(s"knnjoin:${s.sparkContext.applicationId}:$dir:k8i3:k3p2")(
+      graft.operators.Checkpointed(Ivf.knnJoin(emb, "vec_id", "embedding",
+        model, k = 3, nProbe = 2))).df
   }
 
   val defs: Map[String, QueryFn] = Map(

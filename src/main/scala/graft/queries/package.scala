@@ -76,7 +76,16 @@ package object queries {
     * also the production shape, where models are ingest-time artifacts,
     * not per-query work. Driver memory per model: k·d doubles, a few
     * KB. Shared by SimilarityQueries (ANN family) and TextQueries (the
-    * quality classifier) so the keying convention can't drift. */
+    * quality classifier) so the keying convention can't drift.
+    *
+    * Shared relations are memoized as [[graft.operators.Checkpointed]]
+    * handles, keyed by applicationId too (a checkpoint is bound to the
+    * session that built it). A checkpoint, not a persist: consumers get
+    * one leaf instead of the builder's pipeline, whose dedup plans
+    * nested into 9–18k-line trees that every action stringifies for
+    * the SQL listener — ~0.5–0.8 s of driver wall per warm dedup query
+    * (r14 JobProbe). Plan-shape audits of the builders live at the
+    * operator level (PlanAuditSpec). */
   private val fitMemo =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   private[queries] def memoFit[T <: AnyRef](key: String)(fit: => T): T = {
@@ -88,54 +97,25 @@ package object queries {
     // update" whenever the inner key happens to land in the outer key's
     // bin. get/putIfAbsent keeps reentrancy; the worst case is two
     // threads racing to build the same DETERMINISTIC fit, where the
-    // loser's copy is discarded (and unpersisted, so no cache leak).
+    // loser's copy is discarded and released.
     val v = fit
     val prev = fitMemo.putIfAbsent(key, v)
-    if (prev == null) v
-    else {
-      v match {
-        case df: org.apache.spark.sql.Dataset[_] =>
-          df.unpersist(blocking = false); ()
-        case _ => ()
-      }
-      prev.asInstanceOf[T]
-    }
+    if (prev == null) v else { release(v); prev.asInstanceOf[T] }
   }
 
-  /** Memoize a deterministic relation with a TRUNCATED plan: eager
-    * `localCheckpoint` materializes the rows once (internal-row blocks,
-    * MEMORY_AND_DISK — persist-equivalent storage) and hands consumers
-    * a single LogicalRDD leaf instead of the builder's full pipeline.
-    * For the dedup memos the un-truncated plans nested every upstream
-    * cache into 9–18k-line trees, and EVERY action stringifies its plan
-    * for the SQL-listener event while AQE walks it per stage — measured
-    * (r14 JobProbe driver stack samples) as ~0.5–0.8 s of driver wall
-    * around 40 ms of task work on each warm dedup query. Plan-shape
-    * audits of the builder pipelines live at the OPERATOR level
-    * (PlanAuditSpec builds them directly); statistics propagate into
-    * the leaf, so consumer join strategies are unchanged. Block
-    * lifecycle: clearFitMemo drops the reference and the bench sweep's
-    * System.gc() lets the ContextCleaner free the blocks — the same
-    * deferred release the componentLabels checkpoint loop relies on. */
-  private[queries] def memoCkpt(key: String)(
-      fit: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    memoFit(key) { fit.localCheckpoint(true) }
-
-  /** Drop every memoized fit and unpersist any cached DataFrames among
-    * them. The bench harness calls this between query families so one
-    * family's cached models/relations can't skew another family's
-    * timings (and so back-to-back bench runs start from the same cold
-    * state); correctness is unaffected — every fit is a deterministic
-    * pure function, so a re-fit reproduces the same model. */
-  def clearFitMemo(): Unit = {
-    fitMemo.values.forEach {
-      case df: org.apache.spark.sql.Dataset[_] =>
-        df.unpersist(blocking = false); ()
-      case _ => ()
-    }
-    fitMemo.clear()
+  private def release(v: AnyRef): Unit = v match {
+    case c: graft.operators.Checkpointed => c.release()
+    case _ => ()
   }
+
+  /** Drop every memoized fit and release every memoized relation. The
+    * bench harness calls this between query families so one family's
+    * models/relations can't skew another family's timings (and so
+    * back-to-back bench runs start from the same cold state);
+    * correctness is unaffected — every fit is a deterministic pure
+    * function, so a re-fit reproduces the same model. */
+  def clearFitMemo(): Unit =
+    fitMemo.keySet.forEach(k => release(fitMemo.remove(k)))
 
   /** DuckDB twin of [[graft.operators.Dedup.dupClusters]]: the recursive
     * closure + component collapse over a pair relation `rel(id_a, id_b)`.

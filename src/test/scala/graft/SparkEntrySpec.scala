@@ -28,6 +28,26 @@ class SparkEntrySpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("memoized relations are released synchronously on clear") {
+    // the cleanup owners are clearFitMemo (memoized relations) and
+    // clearCache (the builders' own persists) — nothing is left for the
+    // GC; start from no persisted RDDs so other suites' residue can't
+    // fake a leak
+    val sc = spark.sparkContext
+    graft.queries.clearFitMemo()
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    Seq("d_minhash_lsh", "s_knn_join", "t_bm25_topk", "t_hybrid_rrf",
+      "t_classifier_filter").foreach(q =>
+      SparkEntry.queries(q)(spark, sfDir).collect())
+    assert(sc.getPersistentRDDs.nonEmpty)
+    graft.queries.clearFitMemo()
+    spark.catalog.clearCache()
+    assert(sc.getRDDStorageInfo.isEmpty,
+      sc.getRDDStorageInfo.map(_.toString).mkString("; "))
+    assert(sc.getPersistentRDDs.isEmpty)
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query surface smoke: $name") {
       val df = fn(spark, sfDir)

@@ -87,6 +87,18 @@ class TrainingDataOpsSpec extends SparkSpec {
     // fault-tolerant cluster mode. Same semantics, files on disk.
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "test expects no prior ckpt dir")
+    // a memoized query takes the same switch; its local-checkpoint rows
+    // are the reference
+    val corpus = tmpDir("graft-corpus")
+    val words = (1 to 40).map(i => s"w$i").mkString(" ")
+    Seq((1L, words), (2L, words + " z"), (3L, "an unrelated short text"))
+      .toDF("doc_id", "text").write.parquet(s"$corpus/documents.parquet")
+    def memoQuery() = {
+      graft.queries.clearFitMemo()
+      graft.SparkEntry.queries("d_minhash_lsh")(spark, corpus)
+        .collect().toSeq
+    }
+    val localRows = memoQuery()
     val dir = tmpDir("graft-ckpt")
     sc.setCheckpointDir(dir)
     try {
@@ -101,9 +113,13 @@ class TrainingDataOpsSpec extends SparkSpec {
         if (f.isDirectory) Option(f.listFiles).map(_.map(count).sum)
           .getOrElse(0)
         else 1
-      assert(count(new java.io.File(dir)) > 0,
-        "no reliable checkpoint files written")
+      val files = count(new java.io.File(dir))
+      assert(files > 0, "no reliable checkpoint files written")
+      assert(localRows.nonEmpty && memoQuery() === localRows)
+      assert(count(new java.io.File(dir)) > files,
+        "the memo wrote no reliable checkpoint files")
     } finally {
+      graft.queries.clearFitMemo()
       sc.setCheckpointDir(null)
       assert(sc.getCheckpointDir.isEmpty)
     }
@@ -312,6 +328,19 @@ class TrainingDataOpsSpec extends SparkSpec {
       30L -> 2L, 31L -> 2L, 20L -> 20L, 21L -> 20L, 22L -> 20L)
     assert(viaDriver === expected)
     assert(viaLoop === expected)
+  }
+
+  test("componentLabels: superseded rounds are released, one remains") {
+    // a 32-node chain: pointer doubling still needs ≥3 rounds, and each
+    // round checkpoints; only the returned round may stay persisted
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = (1L to 31L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val labels = Dedup.componentLabels(pairs, driverFallbackEdges = 0)
+      .collect()
+    assert(labels.map(_.getLong(1)).toSet === Set(1L))
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.size <= 1, s"${left.size} checkpointed rounds left")
   }
 
   test("componentLabels: int ids keep their type through the fallback") {
