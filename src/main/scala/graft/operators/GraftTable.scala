@@ -243,7 +243,7 @@ final class GraftTable(
   /** [[append]] into an unpublished staging epoch — invisible to every
     * reader until [[publishStagedLoad]]. */
   def appendStaged(df: DataFrame, version: Long, epoch: Int): Unit =
-    writeBatch(df, version, deleted = false, epoch = Some(epoch))
+    writeBatch(df, version, deleted = lit(false), epoch = Some(epoch))
 
   /** Atomically publish a staged load. Two steps under the epoch lock:
     *
@@ -375,20 +375,25 @@ final class GraftTable(
 
   def exists: Boolean = fs.exists(new Path(epochDataDir(currentEpoch)))
 
-  private def align(df: DataFrame): DataFrame = {
-    val present = df.columns.toSet
-    df.select(columns.toIndexedSeq.map { c =>
-      (if (present.contains(c.name)) col(c.name)
-       else lit(null)).cast(c.dataType).as(c.name)
-    }: _*)
-  }
-
   private def currentGen: Int = gens.last.n
 
-  private def writeBatch(df: DataFrame, version: Long, deleted: Boolean,
-                         epoch: Option[Int] = None): Unit =
+  /** The one writer: `df` aligned by name to the table's columns (absent
+    * ones NULL, extra ones dropped), stamped `_version = version` and,
+    * per row, `_deleted = deleted` (a predicate over `df`). A tombstone
+    * row keeps its key columns and stores NULL in every other column —
+    * the reference's erase carries no payload (clickhouse_api.py:368-400)
+    * — so a caller may write images and tombstones in one job. `epoch`
+    * names an unpublished staging epoch; None writes the live one. */
+  def writeBatch(df: DataFrame, version: Long, deleted: Column,
+                 epoch: Option[Int] = None): Unit = {
+    val present = df.columns.toSet
+    val stamped = df.select(columns.toIndexedSeq.map { c =>
+      val v = (if (present.contains(c.name)) col(c.name)
+               else lit(null)).cast(c.dataType)
+      (if (keys.contains(c.name)) v else when(!deleted, v)).as(c.name)
+    } ++ Seq(lit(version).as("_version"), deleted.as("_deleted")): _*)
     epoch match {
-      case Some(e) => writeBatchTo(df, version, deleted, e)
+      case Some(e) => writeStamped(stamped, e)
       case None =>
         // LIVE write: epoch resolution and the parquet commit are atomic
         // under the table's epoch lock, so a concurrent
@@ -401,15 +406,10 @@ final class GraftTable(
         // one-per-table); staged shard appends go to a different
         // directory and take no lock.
         epochLock.synchronized {
-          writeBatchTo(df, version, deleted, currentEpoch)
+          writeStamped(stamped, currentEpoch)
         }
     }
-
-  private def writeBatchTo(df: DataFrame, version: Long, deleted: Boolean,
-                           epoch: Int): Unit =
-    writeStamped(align(df)
-      .withColumn("_version", lit(version))
-      .withColumn("_deleted", lit(deleted)), epoch)
+  }
 
   /** Write an already-stamped frame (payload + `_version` + `_deleted`,
     * possibly heterogeneous per row — the staged-publish delta) with the
@@ -443,12 +443,12 @@ final class GraftTable(
     * `_version` stamping, clickhouse_api.py:303-366). Caller is expected
     * to have LWW-collapsed the batch to one image per key. */
   def append(df: DataFrame, version: Long): Unit =
-    writeBatch(df, version, deleted = false)
+    writeBatch(df, version, deleted = lit(false))
 
   /** Delete by key at `version`: tombstone rows with NULL payload
     * (reference erase, clickhouse_api.py:368-400). */
   def delete(keyDf: DataFrame, version: Long): Unit =
-    writeBatch(keyDf.select(keys.map(col): _*), version, deleted = true)
+    writeBatch(keyDf, version, deleted = lit(true))
 
   private def metaFields: Seq[StructField] = Seq(
     StructField("_version", LongType, nullable = false),

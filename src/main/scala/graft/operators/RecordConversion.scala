@@ -125,9 +125,16 @@ object RecordConversion {
     * (converter.py:560-573); we align by name.
     */
   def convert(df: DataFrame, schema: TableSchema,
-              mysqlTimezone: String = "UTC"): DataFrame = {
+              mysqlTimezone: String = "UTC"): DataFrame =
+    df.select(columns(df, schema, mysqlTimezone): _*)
+
+  /** [[convert]]'s select list over `df`: one converted column per
+    * schema field, named after it — for callers that project further
+    * columns of `df` alongside the converted row. */
+  def columns(df: DataFrame, schema: TableSchema,
+              mysqlTimezone: String = "UTC"): Seq[Column] = {
     val wireTypes = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val cols = schema.fields.map { f =>
+    schema.fields.map { f =>
       val target = MySqlType.toSpark(f.tpe)
       val base: Column = wireTypes.get(f.name) match {
         case None => lit(null).cast(target)
@@ -141,7 +148,6 @@ object RecordConversion {
       withDefault.cast(target).as(f.name,
         MySqlType.metadata(f.tpe, f.sourceType))
     }
-    df.select(cols: _*)
   }
 
   /** X3 — charset decode: text bytes off the wire decode with the

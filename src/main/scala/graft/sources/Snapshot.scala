@@ -104,7 +104,11 @@ object Snapshot {
   /** Shard-resumable, atomically-published snapshot: the table is
     * written as `shards` sequential per-shard append jobs into an
     * UNPUBLISHED staging epoch ([[GraftTable.beginStagedLoad]]), each
-    * committing a durable completion marker — a driver restart
+    * committing a durable completion marker. The shards stay sequential:
+    * concurrent appends into one generation directory share Hadoop's
+    * `_temporary` commit directory, and one job's commit or abort can
+    * take another's files with it (different TABLES may load
+    * concurrently — [[graft.streaming.Replicator]] does). A driver restart
     * mid-snapshot redoes only the shards without markers, the
     * reference's `(table, max_primary_key)` resume granularity
     * (db_replicator_initial.py:183-192) re-expressed as deterministic

@@ -25,9 +25,11 @@ import graft.types.MySqlType
   *
   *  1. split the micro-batch at DDL boundaries (seq order) — the
   *     reference's flush-before-DDL barrier (db_replicator_realtime.py:183-196);
-  *  2. per segment, per (db, table): parse row JSON with the schema *as
-  *     of that segment*, LWW-collapse per PK (A1), convert (X1-X12), then
-  *     append images / tombstones stamped with a monotone version;
+  *  2. per segment, per (db, table), ONE write job: parse row JSON with
+  *     the schema *as of that segment*, LWW-collapse per PK (A1), convert
+  *     (X1-X12), and write images and tombstones together, stamped with
+  *     a monotone version and a per-row `_deleted` flag; the tables of a
+  *     segment flush in parallel;
   *  3. apply the DDL to the SchemaRegistry + storage, then continue.
   *
   * Versions are `(batchId + 1) << 20 | segment` — monotone across batches
@@ -152,30 +154,26 @@ final class CdcPipeline(
         }
         .sortBy(_._1)
 
-      val dml = batch.filter(col("op") =!= EventSpool.OpQuery)
-      // ONE segment manifest job for the whole batch: per (segment, db,
-      // table), the add/remove event counts. This replaces one
-      // active-tables collect PER SEGMENT and (via the counts) the two
-      // per-table isEmpty probe jobs — each was its own Spark job over
-      // the cached batch, and at the bench's batch sizes the fixed job
-      // round-trips were a measurable slice of the e2e wall (r13 VERDICT
-      // item 4). A DML row's segment is the number of DDL barriers below
-      // its seq (DDL and DML share one unique seq space, so equality
-      // cannot occur).
+      // ignore_deletes (config.py): REMOVEs are dropped BEFORE the LWW
+      // collapse — an insert-then-delete pair must keep the insert, not
+      // collapse to a dropped delete (tests/test_mysql_ch_replicator.py:572-641)
+      val dml = batch.filter(!col("op").isin(EventSpool.OpQuery +:
+        (if (config.ignoreDeletes) Seq(EventSpool.OpRemove) else Nil): _*))
+      // ONE segment manifest job for the whole batch: the (segment, db,
+      // table) triples that carry DML, so no segment or table probes the
+      // batch on its own. A DML row's segment is the number of DDL
+      // barriers below its seq (DDL and DML share one unique seq space,
+      // so equality cannot occur).
       val segOf = ddls.map(_._1).foldLeft(lit(0)) { (acc, b) =>
         acc + when(col("seq") > b, 1).otherwise(0)
       }
       val manifest = dml
-        .groupBy(segOf.as("seg"), col("db"), col("table"))
-        .agg(sum(when(col("op") === EventSpool.OpAdd, 1L).otherwise(0L))
-            .as("n_add"),
-          sum(when(col("op") === EventSpool.OpRemove, 1L).otherwise(0L))
-            .as("n_rem"))
+        .select(segOf.as("seg"), col("db"), col("table")).distinct()
         .collect()
         .groupBy(_.getInt(0))
         .map { case (seg, rows) =>
           seg -> rows.map(r => (Option(r.getString(1)),
-            Option(r.getString(2)), r.getLong(3), r.getLong(4))).toSeq
+            Option(r.getString(2)))).toSeq
         }
       var lo = Long.MinValue
       var segment = 0
@@ -194,7 +192,7 @@ final class CdcPipeline(
       // compact is idempotent, so retry is safe
       compactor.foreach(_.tick())
       spoolSweeper.foreach(_.apply())
-    } finally batch.unpersist(blocking = false)
+    } finally batch.unpersist(blocking = true)
   }
 
   /** A DDL from a non-replicated session db still applies when its
@@ -256,7 +254,7 @@ final class CdcPipeline(
   // one shared daemon pool for per-table parallel flushes — segments are
   // serial (the micro-batch loop drives them), so every batch reuses it
   // instead of constructing and tearing down a pool per segment
-  private lazy val flushEc: scala.concurrent.ExecutionContext =
+  private[streaming] lazy val flushEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(8, (r: Runnable) => {
         val t = new Thread(r, "graft-flush")
@@ -265,22 +263,21 @@ final class CdcPipeline(
       }))
 
   private def flushSegment(dml: DataFrame, version: Long,
-      traffic: Seq[(Option[String], Option[String], Long, Long)]): Unit = {
+      traffic: Seq[(Option[String], Option[String])]): Unit = {
     // which tables have traffic comes from the batch-wide manifest (one
     // job per BATCH, not one distinct().collect() per segment) — bounded
     // by table count, not row count. A null event db resolves to the
     // bound default db, the same resolution DDL events get (class doc) —
     // a producer omitting `db` must not silently lose rows.
     val active = traffic
-      .collect { case (eventDb, Some(tbl), nAdd, nRem) =>
-        (eventDb, tbl, nAdd, nRem) }
-      .filter { case (eventDb, tbl, _, _) =>
+      .collect { case (eventDb, Some(tbl)) => (eventDb, tbl) }
+      .filter { case (eventDb, tbl) =>
         config.databaseMatches(eventDb.getOrElse(registry.defaultDb)) &&
           config.tableMatches(tbl)
       }
-      .flatMap { case (eventDb, tbl, nAdd, nRem) =>
+      .flatMap { case (eventDb, tbl) =>
         resolveTable(eventDb.getOrElse(registry.defaultDb), tbl)
-          .map(key => key -> (eventDb, nAdd, nRem))
+          .map(key => key -> eventDb)
       }
     // several event dbs can resolve to the same bound table — one flush
     // per resolved key so a single LWW collapse covers the whole segment
@@ -294,25 +291,16 @@ final class CdcPipeline(
       dml.filter(dbPred && col("table") === tbl)
     }
     // Tables flush CONCURRENTLY (bounded pool): each flush is its own
-    // chain of Spark jobs, and with many replicated tables a sequential
-    // loop leaves the cluster idle between small per-table stages — the
+    // Spark job, and with many replicated tables a sequential loop
+    // leaves the cluster idle between small per-table stages — the
     // reference uploads tables one by one (db_replicator_realtime.py:
     // 324-374) because each upload is one INSERT; here parallel driver
     // threads let the scheduler interleave the per-table stages.
     val groups = active.groupBy(_._1).toSeq
-    // several event dbs can resolve to one key — sum their counts so the
-    // emptiness decisions below cover the whole flushed segment
-    def dbsOf(entries: Seq[(Option[String], Long, Long)]) =
-      entries.map(_._1)
-    def addsOf(entries: Seq[(Option[String], Long, Long)]) =
-      entries.map(_._2).sum
-    def remsOf(entries: Seq[(Option[String], Long, Long)]) =
-      entries.map(_._3).sum
+      .map { case ((db, tbl), entries) => (db, tbl, entries.map(_._2)) }
     if (groups.size <= 1)
-      groups.foreach { case ((db, tbl), entries0) =>
-        val entries = entries0.map(_._2)
-        flushTable(segmentOf(dbsOf(entries), tbl), db, tbl, version,
-          addsOf(entries), remsOf(entries))
+      groups.foreach { case (db, tbl, dbs) =>
+        flushTable(segmentOf(dbs, tbl), db, tbl, version)
       }
     else {
       import scala.concurrent.{Await, ExecutionContext, Future}
@@ -320,8 +308,7 @@ final class CdcPipeline(
       implicit val ec: ExecutionContext = flushEc
       val groupId = s"graft-flush-$version"
       val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val futures = groups.map { case ((db, tbl), entries0) => Future {
-        val entries = entries0.map(_._2)
+      val futures = groups.map { case (db, tbl, dbs) => Future {
         // a queued flush must not START once a sibling has failed:
         // cancelJobGroup reaches only already-running jobs, so with more
         // groups than pool threads a queued future would otherwise
@@ -337,8 +324,7 @@ final class CdcPipeline(
           // to reuse
           spark.sparkContext.setJobGroup(groupId, s"flush $db.$tbl",
             interruptOnCancel = true)
-          try flushTable(segmentOf(dbsOf(entries), tbl), db, tbl,
-            version, addsOf(entries), remsOf(entries))
+          try flushTable(segmentOf(dbs, tbl), db, tbl, version)
           finally spark.sparkContext.clearJobGroup()
         }
       } }
@@ -356,27 +342,18 @@ final class CdcPipeline(
     }
   }
 
-  private def flushTable(events0: DataFrame, db: String, tbl: String,
-                         version: Long, nAdd: Long, nRem: Long): Unit = {
-    // ignore_deletes (config.py): REMOVEs are dropped BEFORE the LWW
-    // collapse — an insert-then-delete pair must keep the insert, not
-    // collapse to a dropped delete (tests/test_mysql_ch_replicator.py:572-641)
-    val events =
-      if (config.ignoreDeletes)
-        events0.filter(col("op") =!= EventSpool.OpRemove)
-      else events0
-    val effRem = if (config.ignoreDeletes) 0L else nRem
-    if (nAdd == 0L && effRem == 0L) return
+  /** One segment of one table as ONE write job: A1 LWW per PK across the
+    * segment (insert-then-delete of the same key must resolve to the
+    * *last* op, db_replicator_realtime.py:123-177), every column converted
+    * once (X1-X12), and each surviving row written as an image or — its
+    * last op a REMOVE — a tombstone, stamped per row. */
+  private def flushTable(events: DataFrame, db: String, tbl: String,
+                         version: Long): Unit = {
     val schema = registry(db, tbl)
-    val target = table(db, tbl)
     // wire schema: every field as string; RecordConversion casts/decodes.
     val wire = StructType(schema.fields.map(f =>
       org.apache.spark.sql.types.StructField(f.name,
         org.apache.spark.sql.types.StringType)))
-
-    // A1: LWW per PK across the whole segment (insert-then-delete of the
-    // same key must resolve to the *last* op, db_replicator_realtime.py:123-177):
-    // parse first, then collapse on the typed PKs.
     // Metadata columns carry reserved names: a payload column named
     // `seq` or `op` is legal MySQL and would otherwise make every
     // downstream reference AMBIGUOUS; and fields are pulled out of the
@@ -389,47 +366,15 @@ final class CdcPipeline(
         from_json(col("row"), wire).as("r"))
       .select(Seq(col(mseq), col(mop)) ++
         schema.fields.map(f => col("r")(f.name).as(f.name)): _*)
-    // persist: the collapse feeds four consumers (two emptiness probes +
-    // the image append + the tombstone write) — without it each one
-    // re-parses and re-shuffles the whole segment
     val collapsed = FinalView.latestByKey(parsed, schema.primaryKeys,
       struct(col(mseq)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val adds = collapsed.filter(col(mop) === EventSpool.OpAdd)
-        .drop(mseq, mop)
-      val removes = collapsed.filter(col(mop) === EventSpool.OpRemove)
-        .select(schema.primaryKeys.map(col): _*)
-
-      // Post-collapse emptiness from the manifest counts where they are
-      // conclusive (one-sided segments: the collapse cannot invent the
-      // other op), and from ONE aggregate job where they are not — the
-      // previous two per-table isEmpty probes were a Spark job each
-      // (r13 VERDICT item 4). A mixed segment CAN collapse to one side
-      // (a PK's add followed by its remove), so raw counts alone must
-      // not drive the append/delete decisions there.
-      val (hasAdds, hasRemoves) =
-        if (effRem == 0L) (nAdd > 0L, false)
-        else if (nAdd == 0L) (false, effRem > 0L)
-        else {
-          val c = collapsed.agg(
-            sum(when(col(mop) === EventSpool.OpAdd, 1L).otherwise(0L)),
-            sum(when(col(mop) === EventSpool.OpRemove, 1L).otherwise(0L)))
-            .head()
-          (c.getLong(0) > 0L, c.getLong(1) > 0L)
-        }
-      if (hasAdds)
-        target.append(RecordConversion.convert(adds, schema,
-          config.mysqlTimezone), version)
-      if (hasRemoves) {
-        // REMOVE payloads carry PKs only (converter.py:575-583); convert
-        // just the key columns so typed keys match the stored images.
-        val keySchema = schema.copy(fields =
-          schema.fields.filter(f => schema.primaryKeys.contains(f.name)))
-        target.delete(RecordConversion.convert(removes, keySchema,
-          config.mysqlTimezone), version)
-      }
-    } finally collapsed.unpersist(blocking = false)
+    // REMOVE payloads carry PKs only (converter.py:575-583): the key
+    // converts like an image's, so typed keys match the stored images,
+    // and the writer stores NULL in every other column of a tombstone
+    table(db, tbl).writeBatch(
+      collapsed.select(RecordConversion.columns(collapsed, schema,
+        config.mysqlTimezone) :+ col(mop): _*),
+      version, deleted = col(mop) === EventSpool.OpRemove)
   }
 
   /** Parse one session-admitted DDL statement; unparseable → Ignored,
@@ -623,21 +568,23 @@ final class CdcPipeline(
 
 object CdcPipeline {
   import scala.concurrent.{Await, Future}
-  import scala.concurrent.duration.{Duration, FiniteDuration}
+  import scala.concurrent.duration.Duration
 
   /** Wait for every future to settle — success or failure — under ONE
-    * shared deadline. Used by the flush-abort path: a per-future
-    * timeout would stack to N×deadline with many blocked flush groups
-    * and stall the micro-batch thread long past any useful retry, while
-    * a deadline shared across the drain bounds the whole abort at
-    * `total` regardless of group count. Failures are swallowed: the
-    * caller rethrows the ORIGINAL flush failure, and a timed-out future
-    * here is exactly the orphan the bounded wait exists to abandon. */
+    * shared deadline (`Duration.Inf`: none, as the snapshot phase
+    * waits). Used by the flush-abort path: a per-future timeout would
+    * stack to N×deadline with many blocked flush groups and stall the
+    * micro-batch thread long past any useful retry, while a deadline
+    * shared across the drain bounds the whole abort at `total`
+    * regardless of group count. Failures are swallowed: the caller
+    * rethrows the ORIGINAL failure, and a timed-out future here is
+    * exactly the orphan the bounded wait exists to abandon. */
   private[streaming] def drainAll(futures: Seq[Future[_]],
-                                  total: FiniteDuration): Unit = {
-    val deadline = total.fromNow
+                                  total: Duration): Unit = {
+    val t0 = System.nanoTime()
+    def timeLeft = total - Duration.fromNanos(System.nanoTime() - t0)
     futures.foreach(f =>
-      try { Await.result(f, deadline.timeLeft max Duration.Zero); () }
+      try { Await.result(f, timeLeft max Duration.Zero); () }
       catch { case _: Throwable => () })
   }
 }

@@ -11,9 +11,10 @@ import graft.sources.Snapshot
   * initial bulk replication, then realtime binlog tailing — here an
   * optional snapshot phase landing version-0 rows on the exact warehouse
   * paths the realtime pipeline keeps appending to, then the spool
-  * stream. `config.skipInitialReplication` skips the snapshot phase
-  * (reference `initial_replication: false` — the target starts empty and
-  * fills from the stream only).
+  * stream. The tables snapshot in parallel, each table's shards in
+  * order ([[Snapshot.runSharded]]). `config.skipInitialReplication`
+  * skips the snapshot phase (reference `initial_replication: false` —
+  * the target starts empty and fills from the stream only).
   */
 object Replicator {
 
@@ -42,48 +43,58 @@ object Replicator {
     if (!config.skipInitialReplication) {
       val fs = new org.apache.hadoop.fs.Path(warehouseDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      snapshots.foreach { case (tbl, df) =>
-        // completion markers make restarts cheap and idempotent — the
-        // reference persists per-table initial-replication status the
-        // same way (db_replicator.py:213-281). Granularity is per SHARD
-        // (db_replicator_initial.py:183-192's (table, max_primary_key)
-        // resume): a driver restart mid-snapshot redoes only the shards
-        // whose markers are missing, not whole tables — at 100 TB a
-        // per-table redo is a multi-hour scan. The per-table marker
-        // written after all shards collapses the bookkeeping back to one
-        // existence probe per restart.
-        val db = registry.defaultDb
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$warehouseDir/_state/initial_done/$db.$tbl")
-        if (config.tableMatches(tbl) && registry.contains(tbl) &&
-            !fs.exists(marker)) {
-          val shards = math.max(1, config.initialReplicationThreads)
-          val pks = registry(tbl).primaryKeys
-          // the marker dir ENCODES the shard count: a crashed 8-way
-          // snapshot restarted with 4 threads must not skip "shard-0/1"
-          // of the new split (different residue sets — rows would be
-          // silently lost); a count change invalidates all markers and
-          // the redone shards collapse in the FINAL view
-          val shardsDir =
-            s"$warehouseDir/_state/initial_done/$db.$tbl.shards-$shards"
-          val source: Int => DataFrame = shardSources.getOrElse(tbl,
-            k => if (shards == 1) df
-                 else df.filter(Snapshot.shardPredicate(pks, shards, k)))
-          // +1: the config contract (Config.scala version_initial_value)
-          // and the reference (clickhouse_api.py get_last_used_version →
-          // increment-then-stamp) both promise stamps STRICTLY above the
-          // initial value — at the base itself a snapshot row would TIE
-          // with a pre-existing version-N row instead of winning the
-          // FINAL dedup. Realtime batches stamp at ≥ initial + 2^20
-          // (CdcPipeline.version), comfortably above.
-          Snapshot.runSharded(spark, registry(tbl),
-            pipeline.tablePath(db, tbl), shardsDir, shards, source, config,
-            version = config.versionInitialValue + 1)
-          Option(marker.getParent).foreach(fs.mkdirs)
-          fs.create(marker, true).close()
-          fs.delete(new org.apache.hadoop.fs.Path(shardsDir), true)
-        }
+      // completion markers make restarts cheap and idempotent — the
+      // reference persists per-table initial-replication status the same
+      // way (db_replicator.py:213-281). Granularity is per SHARD
+      // (db_replicator_initial.py:183-192's (table, max_primary_key)
+      // resume): a driver restart mid-snapshot redoes only the shards
+      // whose markers are missing, not whole tables — at 100 TB a
+      // per-table redo is a multi-hour scan. The per-table marker written
+      // after all shards collapses the bookkeeping back to one existence
+      // probe per restart.
+      val db = registry.defaultDb
+      def marker(tbl: String) = new org.apache.hadoop.fs.Path(
+        s"$warehouseDir/_state/initial_done/$db.$tbl")
+      def snapshot(tbl: String, df: DataFrame): Unit = {
+        val shards = math.max(1, config.initialReplicationThreads)
+        val pks = registry(tbl).primaryKeys
+        // the marker dir ENCODES the shard count: a crashed 8-way
+        // snapshot restarted with 4 threads must not skip "shard-0/1" of
+        // the new split (different residue sets — rows would be silently
+        // lost); a count change invalidates all markers and the redone
+        // shards collapse in the FINAL view
+        val shardsDir =
+          s"$warehouseDir/_state/initial_done/$db.$tbl.shards-$shards"
+        val source: Int => DataFrame = shardSources.getOrElse(tbl,
+          k => if (shards == 1) df
+               else df.filter(Snapshot.shardPredicate(pks, shards, k)))
+        // +1: the config contract (Config.scala version_initial_value)
+        // and the reference (clickhouse_api.py get_last_used_version →
+        // increment-then-stamp) both promise stamps STRICTLY above the
+        // initial value — at the base itself a snapshot row would TIE
+        // with a pre-existing version-N row instead of winning the FINAL
+        // dedup. Realtime batches stamp at ≥ initial + 2^20
+        // (CdcPipeline.version), comfortably above.
+        Snapshot.runSharded(spark, registry(tbl),
+          pipeline.tablePath(db, tbl), shardsDir, shards, source, config,
+          version = config.versionInitialValue + 1)
+        Option(marker(tbl).getParent).foreach(fs.mkdirs)
+        fs.create(marker(tbl), true).close()
+        fs.delete(new org.apache.hadoop.fs.Path(shardsDir), true)
       }
+      // Tables snapshot CONCURRENTLY on the flush pool: one table's
+      // shards are a serial chain of small jobs that leaves most cores
+      // idle. A failure waits for every sibling to settle — they finish
+      // and write their markers — before it is rethrown, so no table is
+      // still writing when the caller sees it, and a restart redoes only
+      // the failed table.
+      val futures = snapshots.toSeq
+        .filter { case (tbl, _) => config.tableMatches(tbl) &&
+          registry.contains(tbl) && !fs.exists(marker(tbl)) }
+        .map { case (tbl, df) =>
+          scala.concurrent.Future(snapshot(tbl, df))(pipeline.flushEc) }
+      CdcPipeline.drainAll(futures, scala.concurrent.duration.Duration.Inf)
+      futures.foreach(_.value.foreach(_.get))
       runPostCommands(spark, config, registry, pipeline, fs, warehouseDir)
     }
     // db_optimizer as part of the pipeline: the reference supervises a

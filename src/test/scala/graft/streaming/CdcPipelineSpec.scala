@@ -868,4 +868,160 @@ class CdcPipelineSpec extends SparkSpec {
     assert(elapsedMs >= 250.0,
       s"drain took ${elapsedMs}ms — never waited for the blocked flush")
   }
+
+  test("processBatch releases its batch cache synchronously (two tables)") {
+    val registry = new SchemaRegistry
+    registry.applySql(
+      "CREATE TABLE users (id int NOT NULL, name varchar(50), PRIMARY KEY(id))")
+    registry.applySql(
+      "CREATE TABLE orders (id int NOT NULL, v int, PRIMARY KEY(id))")
+    val pipeline = new CdcPipeline(spark, GraftConfig(), registry,
+      tmpDir("graft-wh-rel"))
+    val spool = tmpDir("graft-spool-rel")
+    writeFile(spool, "000001.json", Seq(
+      eventJson(1, "d", "users", OpAdd, row = Some("""{"id":"1","name":"ann"}""")),
+      eventJson(2, "d", "orders", OpAdd, row = Some("""{"id":"7","v":"70"}""")),
+      eventJson(3, "d", "users", OpAdd, row = Some("""{"id":"2","name":"bob"}""")),
+      eventJson(4, "d", "orders", OpAdd, row = Some("""{"id":"8","v":"80"}""")),
+      eventJson(5, "d", "users", OpRemove, row = Some("""{"id":"1"}""")),
+      eventJson(6, "d", "orders", OpRemove, row = Some("""{"id":"7"}"""))))
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    pipeline.processBatch(EventSpool.readBatch(spark, spool), 0)
+    assert(sc.getRDDStorageInfo.isEmpty,
+      sc.getRDDStorageInfo.map(_.toString).mkString("; "))
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(pipeline.table("users").read.collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq === Seq((2, "bob")))
+    assert(pipeline.table("orders").read.collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq === Seq((8, 80)))
+  }
+
+  test("tombstones keep the converted key and NULL payload (unsigned BIGINT pk)") {
+    val registry = new SchemaRegistry
+    registry.applySql(
+      """CREATE TABLE big (id bigint unsigned NOT NULL,
+        |  name varchar(20) NOT NULL, n int NOT NULL, PRIMARY KEY(id))""".stripMargin)
+    val pipeline = new CdcPipeline(spark, GraftConfig(), registry,
+      tmpDir("graft-wh-tomb"))
+    def batch(id: Long, events: Seq[String]): Unit = {
+      val spool = tmpDir("graft-spool-tomb")
+      writeFile(spool, "000001.json", events)
+      pipeline.processBatch(EventSpool.readBatch(spark, spool), id)
+    }
+    def add(seq: Long, id: String, name: String, n: Int) =
+      eventJson(seq, "d", "big", OpAdd,
+        row = Some(s"""{"id":"$id","name":"$name","n":"$n"}"""))
+    def remove(seq: Long, id: String) =
+      eventJson(seq, "d", "big", OpRemove, row = Some(s"""{"id":"$id"}"""))
+    def finalState = pipeline.table("big").read.collect()
+      .map(r => (r.getDecimal(0).toString, r.getString(1), r.getInt(2))).toSet
+    // the binlog sends unsigned BIGINT sign-reinterpreted: -5 is 2^64 - 5
+    val huge = "18446744073709551611"
+    batch(0, Seq(add(1, "1", "a", 1), add(2, "-5", "e", 5), add(3, "3", "c", 3)))
+    assert(finalState === Set(("1", "a", 1), (huge, "e", 5), ("3", "c", 3)))
+    // mixed events collapsing to tombstones only: 4 is inserted then
+    // deleted inside the segment; 1 and 2^64-5 are deleted
+    batch(1, Seq(add(4, "4", "d", 4), remove(5, "4"), remove(6, "1"),
+      remove(7, "-5")))
+    assert(finalState === Set(("3", "c", 3)))
+    val tombs = pipeline.table("big").log.filter("_deleted").collect()
+    assert(tombs.map(_.getDecimal(0).toString).toSet === Set("1", "4", huge))
+    // NULL, not the NOT NULL columns' type defaults ('' and 0)
+    tombs.foreach(r => assert(r.isNullAt(1) && r.isNullAt(2), r.toString))
+    // mixed events collapsing to images only: 3 is deleted, then
+    // re-inserted; 2^64-5 comes back
+    batch(2, Seq(remove(8, "3"), add(9, "3", "c2", 33), add(10, "-5", "e2", 6)))
+    assert(finalState === Set(("3", "c2", 33), (huge, "e2", 6)))
+  }
+
+  test("one write per table-segment: a mixed batch adds <= bucket x salt files") {
+    val (pipeline, _) = mkPipeline()
+    val root = pipeline.table("users").root
+    def filesPerBucket(): Map[String, Int] = {
+      import scala.jdk.CollectionConverters._
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try s.iterator.asScala.filter(_.toString.endsWith(".parquet")).toSeq
+        .groupBy(_.getParent.getFileName.toString).map { case (b, fs) => b -> fs.size }
+      finally s.close()
+    }
+    def batch(id: Long, events: Seq[String]): Unit = {
+      val spool = tmpDir("graft-spool-1w")
+      writeFile(spool, "000001.json", events)
+      pipeline.processBatch(EventSpool.readBatch(spark, spool), id)
+    }
+    // keys in two PK buckets (width 4294967)
+    val keys = (1 to 200) ++ (5000001 to 5000200)
+    batch(0, keys.zipWithIndex.map { case (k, i) =>
+      eventJson(i + 1L, "d", "users", OpAdd, row = Some(row(k, "a", 1))) })
+    // no coalescing of the write shuffle: every (bucket, salt) pair gets
+    // its own write task, the layout of a batch too large to coalesce —
+    // so a second write job per segment shows as extra files
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val before = filesPerBucket()
+    try batch(1, keys.zipWithIndex.map { case (k, i) =>
+      val seq = 1000L + i
+      if (i % 2 == 0) eventJson(seq, "d", "users", OpAdd, row = Some(row(k, "b", 2)))
+      else eventJson(seq, "d", "users", OpRemove, row = Some(s"""{"id":"$k"}"""))
+    })
+    finally spark.conf.set(key, prev)
+    val added = filesPerBucket().map { case (b, n) => b -> (n - before.getOrElse(b, 0)) }
+    assert(added.keySet === Set("_bucket=0", "_bucket=1"))
+    added.foreach { case (b, n) => assert(n <= 4, s"$b: $n files from one batch") }
+    assert(pipeline.table("users").read.count() === keys.size / 2)
+  }
+
+  test("Replicator: tables snapshot in parallel; a failure settles its siblings") {
+    import spark.implicits._
+    val tables = Seq("a", "b", "c")
+    val rows = (1 to 20).map(i => (i, s"v$i")).toDF("id", "v")
+    def registry() = {
+      val r = new SchemaRegistry
+      tables.foreach(t => r.applySql(
+        s"CREATE TABLE $t (id int NOT NULL, v varchar(10), PRIMARY KEY(id))"))
+      r
+    }
+    val config = GraftConfig(initialReplicationThreads = 1)
+    val calls = tables.map(t =>
+      t -> new java.util.concurrent.atomic.AtomicInteger).toMap
+    // a slow shard read for a and c: a start that rethrew b's failure
+    // before they settled would find their markers missing
+    def source(t: String, fail: Boolean): Int => org.apache.spark.sql.DataFrame =
+      _ => {
+        calls(t).incrementAndGet()
+        if (fail) throw new IllegalStateException(s"source $t down")
+        Thread.sleep(1000)
+        rows
+      }
+    def boot(wh: String, snap: Seq[String], failing: Set[String]) =
+      Replicator.start(spark, config, registry(), wh, tmpDir("graft-spool-par"),
+        tmpDir("graft-ckpt-par"),
+        snapshots = snap.map(t => t -> rows).toMap,
+        trigger = Trigger.ProcessingTime("50 milliseconds"),
+        shardSources = snap.map(t => t -> source(t, failing(t))).toMap)
+    def finalOf(p: CdcPipeline, t: String) =
+      p.table(t).read.collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    val wh = tmpDir("graft-wh-par")
+    val e = intercept[IllegalStateException](boot(wh, tables, Set("b")))
+    assert(e.getMessage === "source b down")
+    def done(t: String) =
+      new java.io.File(s"$wh/_state/initial_done/default.$t").exists()
+    assert(done("a") && done("c") && !done("b"))
+    // restart: only the failed table snapshots again
+    val (p, q) = boot(wh, tables, Set.empty)
+    try q.processAllAvailable() finally q.stop()
+    assert(tables.map(t => t -> calls(t).get).toMap === Map("a" -> 1, "b" -> 2, "c" -> 1))
+    // the same FINAL state as one table at a time into a fresh warehouse
+    val seqWh = tmpDir("graft-wh-seq")
+    val seqFinals = tables.map { t =>
+      val (sp, sq) = boot(seqWh, Seq(t), Set.empty)
+      try sq.processAllAvailable() finally sq.stop()
+      t -> finalOf(sp, t)
+    }.toMap
+    assert(tables.map(t => t -> finalOf(p, t)).toMap === seqFinals)
+    assert(seqFinals("b").size === 20)
+  }
 }
